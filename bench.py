@@ -89,7 +89,23 @@ def time_query(spark, q, sf_dir: str, runs: int) -> float:
         release_rank_bases()
 
 
+def n_cpus() -> int:
+    """$SPARK_GRAFT_CPUS (default: the machine count) as a positive int.
+    Read before any timed work, so a bad value fails at once instead of
+    when the report is assembled."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        sys.exit(f"bench: SPARK_GRAFT_CPUS must be a positive integer, "
+                 f"got {raw!r}")
+    return n
+
+
 def main() -> None:
+    cpus = n_cpus()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = int(os.environ.get("BENCH_RUNS", "3"))
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or 0.1)
@@ -165,9 +181,7 @@ def main() -> None:
                 # (VERDICT r15 #8: the c8 scaling artifact previously
                 # reported machine CPUs here); machine_cpus keeps the
                 # hardware count for load/steal adjudication.
-                "n_cpus": int(
-                    os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)
-                ),
+                "n_cpus": cpus,
                 "machine_cpus": os.cpu_count(),
                 "steal_pct_busy": steal_pct_busy,
                 "loaded_box_medians": sorted(PY_STAGE)

@@ -11,11 +11,13 @@ A user switching from the reference drives the same three jobs here:
   python -m hbase_hadoop_flightsearch_spark report  <bronze> <out>
   python -m hbase_hadoop_flightsearch_spark direct  <csv> <out>
 
-`ingest` is HPopulate (CSV -> year-partitioned bronze Parquet), `report`
-is HCompute (bronze scan -> quirk-exact formatted delay report as
-key\\tvalue text), `direct` is Secondary (CSV -> report with no
-intermediate table). Output bytes match the reference's TextOutputFormat
-rendering (AIR- key prefix, leading ', ' month list).
+`ingest` is HPopulate (CSV -> year-partitioned bronze Parquet, parsed
+once into typed columns plus the raw line), `report` is HCompute (a
+column-pruned, year-pruned scan of bronze's typed columns -> quirk-exact
+formatted delay report as key\\tvalue text), `direct` is Secondary (CSV
+-> report with no intermediate table; the CSV reader materializes only
+the fields the report uses). Output bytes match the reference's
+TextOutputFormat rendering (AIR- key prefix, leading ', ' month list).
 """
 
 from __future__ import annotations
@@ -61,12 +63,12 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     from .plans.delay_report import delay_report_from, format_report
+    from .schemas import BTS_INDICES
     from .session import get_spark
     from .sources.ingest import (
-        flights_from_lines,
         ingest_flights,
         read_bronze,
-        read_bts_csv,
+        read_bts_columns,
         write_report_text,
     )
 
@@ -88,29 +90,27 @@ def main(argv: list[str] | None = None) -> int:
         if args.job == "ingest":
             ingest_flights(spark, args.csv, args.bronze)
         elif args.job == "report":
-            # HCompute-faithful: re-parse the stored raw line (the
-            # reference computes from the info:data blob, not typed
-            # cols). The year partition filter goes BELOW the re-parse:
-            # bronze is partitioned by year, and the report's own
-            # year==2008 predicate (on parsed columns) can't reach the
-            # scan through the parse expression — this pre-filter is the
-            # same superset predicate on the partition column, turning
-            # the full-table scan the reference is forced into (random
-            # rowkeys) into partition pruning.
+            # Parse once: ingest already wrote the typed columns, from the
+            # same raw line and the same parse, so the report reads them
+            # directly (the reference must re-parse its info:data blob,
+            # HCompute/Main.java:88). The scan reads only the columns the
+            # report uses, never raw_line, and the year filter on the
+            # partition column prunes to year=2008 instead of the full
+            # scan the reference's random rowkeys force.
             from pyspark.sql import functions as F
 
-            fl = flights_from_lines(
+            fl = (
                 read_bronze(spark, args.bronze)
                 .filter(F.col("year") == 2008)
-                .select("raw_line")
+                .select(*BTS_INDICES)
             )
             write_report_text(
                 format_report(delay_report_from(fl)), args.out
             )
         elif args.job == "direct":
+            fl = read_bts_columns(spark, args.csv)
             write_report_text(
-                format_report(delay_report_from(read_bts_csv(spark, args.csv))),
-                args.out,
+                format_report(delay_report_from(fl)), args.out
             )
         else:  # query
             from .plans.registry import load_all

@@ -34,8 +34,8 @@ WITH q AS (
 )
 SELECT l_returnflag, l_linestatus,
   ROUND(CAST(SUM(qty) AS DOUBLE), 2) AS sum_qty,
-  ROUND(SUM(pc) / CAST(100 AS DOUBLE), 2) AS sum_base_price,
-  ROUND(SUM(pc * (100 - d100)) / CAST(10000 AS DOUBLE), 2)
+  CAST(SUM(pc) AS DOUBLE) / 100 AS sum_base_price,
+  CAST((SUM(pc * (100 - d100)) + 50) // 100 AS DOUBLE) / 100
     AS sum_disc_price,
   ROUND(CAST(SUM(qty) AS DOUBLE) / COUNT(*), 4) AS avg_qty,
   ROUND(CAST(SUM(pc) AS DOUBLE) / (CAST(100 AS DOUBLE) * COUNT(*)), 4)
@@ -55,6 +55,8 @@ GROUP BY l_returnflag, l_linestatus
     "exact BIGINT (disc-price in exact ten-thousandths: "
     "pc * (100 - d100)), and the only float ops are final divisions "
     "of identical integers — summation order can never move a digit. "
+    "The money sums round to cents in integer arithmetic (half-up on "
+    "the exact sum), so no half-cent tie is left to a float ROUND. "
     "Still one partial-aggregated shuffle of O(groups) rows.",
 )
 def agg_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,10 +83,12 @@ def agg_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_returnflag",
             "l_linestatus",
             F.round(F.expr("CAST(sqty AS DOUBLE)"), 2).alias("sum_qty"),
-            F.round(F.expr("spc / CAST(100 AS DOUBLE)"), 2).alias(
-                "sum_base_price"
-            ),
-            F.round(F.expr("sdp / CAST(10000 AS DOUBLE)"), 2).alias(
+            # Exact cents, then one correctly rounded division: a
+            # double ROUND of sdp / 10000 can land either side of a
+            # half-cent tie (Spark rounds the decimal string half-up,
+            # DuckDB the binary value), the integer floor cannot.
+            F.expr("CAST(spc AS DOUBLE) / 100").alias("sum_base_price"),
+            F.expr("CAST((sdp + 50) div 100 AS DOUBLE) / 100").alias(
                 "sum_disc_price"
             ),
             F.round(

@@ -66,6 +66,10 @@ def connected_components(
     """(doc_id, component_id) for `vertices` (col doc_id) under undirected
     `pairs` (cols d1, d2). component_id = min doc_id in the component.
 
+    Precondition: every pair endpoint must be a vertex (d1, d2 are a
+    subset of `vertices.doc_id`). Endpoints outside `vertices` are not
+    filtered out: one adjacent to a vertex surfaces as an extra label row.
+
     Convergence detection: sum(component_id) is strictly decreasing while
     any label changes (labels only ever drop to a smaller doc_id), so two
     equal consecutive sums == fixpoint. One extra round pays for the test;

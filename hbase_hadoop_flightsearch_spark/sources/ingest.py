@@ -10,8 +10,11 @@ fly (S5, :54-73).
 Spark-first redesign (not a translation):
   * the parse is KEPT (schema-on-write): a quote-aware `from_csv` pulls the
     six columns the queries touch (HCompute/Main.java:75-81) into typed
-    fields, while `raw_line` preserves full fidelity like the reference's
-    blob cell;
+    fields once, and `report` scans them back instead of re-parsing;
+    `raw_line` keeps full fidelity like the reference's blob cell and
+    feeds the HBase-shaped read path (`sources/hbase.py`);
+  * `direct` reads through the CSV source (`read_bts_columns`), whose
+    column pruning parses only the fields the report uses;
   * the sink is columnar Parquet partitioned by year — the year filter
     (F1) becomes partition pruning instead of the full scan the reference's
     random rowkeys force;
@@ -66,24 +69,32 @@ def parse_bts_line(line: F.Column) -> F.Column:
     return F.from_csv(line, _POSITIONAL_SCHEMA.simpleString())
 
 
+def _typed_columns(prefix: str = "") -> list[F.Column]:
+    """T1: the positional string fields `<prefix>_c<i>` cast to the typed
+    flights columns.
+
+    try_cast, not cast: real BTS exports carry empty/garbage cells in
+    columns the queries never read for a given row (e.g. ArrDelayMinutes
+    is blank on cancelled flights). Under ANSI mode a plain cast would
+    kill a 100 TB ingest on the first such cell; NULL is the correct
+    schema-on-write answer (the reference never parses those cells either
+    — filters gate emission before the delay parse, HCompute/Main.java:90)."""
+    return [
+        F.col(f"{prefix}_c{idx}").try_cast(_TYPES[name]).alias(name)
+        for name, idx in BTS_INDICES.items()
+    ]
+
+
 def flights_from_lines(df: DataFrame, line_col: str = "raw_line") -> DataFrame:
     """raw-line DataFrame -> typed flights columns + preserved raw_line.
 
     This is the P1+P2+T1 stack (parse, project, cast) as one codegen'd
-    projection; it serves both ingest and the HCompute-style read of a
-    stored line column."""
+    projection; it serves ingest and the HCompute-style read of a stored
+    line column (the HBase blob scan)."""
     parsed = df.withColumn("_p", parse_bts_line(F.col(line_col)))
-    # try_cast, not cast: real BTS exports carry empty/garbage cells in
-    # columns the queries never read for a given row (e.g. ArrDelayMinutes
-    # is blank on cancelled flights). Under ANSI mode a plain cast would
-    # kill a 100 TB ingest on the first such cell; NULL is the correct
-    # schema-on-write answer (the reference never parses those cells either
-    # — filters gate emission before the delay parse, HCompute/Main.java:90).
-    cols = [
-        F.col(f"_p._c{idx}").try_cast(_TYPES[name]).alias(name)
-        for name, idx in BTS_INDICES.items()
-    ]
-    return parsed.select(*cols, F.col(line_col).alias("raw_line"))
+    return parsed.select(
+        *_typed_columns("_p."), F.col(line_col).alias("raw_line")
+    )
 
 
 def read_bts_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -92,6 +103,15 @@ def read_bts_csv(spark: SparkSession, path: str) -> DataFrame:
     for blob-fidelity with HPopulate's info:data cell."""
     raw = spark.read.text(path).withColumnRenamed("value", "raw_line")
     return flights_from_lines(raw)
+
+
+def read_bts_columns(spark: SparkSession, path: str) -> DataFrame:
+    """Headerless CSV scan -> typed flights columns, no raw_line. Same
+    parser and options as `parse_bts_line`, but the CSV source's column
+    pruning parses only the fields a query reads. Unlike `read_bts_csv`,
+    blank lines are dropped, not kept as all-NULL rows."""
+    csv = spark.read.schema(_POSITIONAL_SCHEMA).csv(path)
+    return csv.select(*_typed_columns())
 
 
 def ingest_flights(

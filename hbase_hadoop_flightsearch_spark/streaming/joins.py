@@ -33,7 +33,9 @@ ATTRIBUTION_WINDOW = "1 hour"
 
 
 def _hour_bucket(ts) -> "F.Column":
-    return (F.unix_micros(ts) / F.lit(3_600_000_000)).cast("long")
+    # floor, not a cast: a cast truncates toward zero, which folds the
+    # hour on each side of the epoch into one two-hour bucket 0.
+    return F.floor(F.unix_micros(ts) / F.lit(3_600_000_000))
 
 
 def attribute_purchases(views: DataFrame, purchases: DataFrame) -> DataFrame:

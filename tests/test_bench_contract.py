@@ -55,3 +55,21 @@ def test_subsecond_pins_are_headline_seats_under_one_second():
     headline = {q.name for q in load_all().values() if q.headline}
     assert set(bench.SUB_SECOND_PINS) <= headline
     assert all(0 < pin < 1.0 for pin in bench.SUB_SECOND_PINS.values())
+
+
+def test_bad_cpu_count_fails_before_spark_starts(monkeypatch):
+    """A non-numeric or non-positive SPARK_GRAFT_CPUS must stop the bench
+    with a clear message before any timed work, not crash when the
+    finished run's report is assembled."""
+    import pytest
+
+    def _no_spark(*a, **k):
+        raise AssertionError("Spark started despite a bad SPARK_GRAFT_CPUS")
+
+    monkeypatch.setattr(bench, "get_spark", _no_spark)
+    for bad in ("four", "0", "-2", ""):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(SystemExit, match="SPARK_GRAFT_CPUS"):
+            bench.main()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert bench.n_cpus() == 3

@@ -399,6 +399,97 @@ def test_cli_jobs_match_reference_shapes(spark, bts_csv, tmp_path):
     for line in a:
         assert pat.match(line), line
 
+    # Edge lines, CRLF-terminated: `report` reads the columns ingest
+    # parsed, `direct` parses through the CSV source, which drops the
+    # blank lines ingest keeps as all-NULL rows. Both must still agree.
+    good = _bts_line(2008, 1, 3, "ZZ", 10.0, 0.0, 0.0)
+    quoted = good.split(",")
+    quoted[10] = '"a,b"'  # a quote-unaware split shifts every later field
+    quoted[37] = "20.00"
+    edge = [
+        good,
+        ",".join(quoted),
+        "2008,1,3",
+        "2008,1,3,x,x,x,ZZ",
+        good.replace("2008", "notayear", 1),
+        good.replace(",10.00,", ",garbage,", 1).replace(",3,", ",4,", 1),
+        ',,,"unterminated,quote',
+        "",
+        "   ",
+    ]
+    csv = tmp_path / "edge.csv"
+    with open(bts_csv) as src, open(csv, "w", newline="") as dst:
+        dst.write(src.read() + "\r\n".join(edge) + "\r\n")
+    bronze = str(tmp_path / "bronze_edge")
+    out_a = str(tmp_path / "report_edge_via_bronze")
+    out_b = str(tmp_path / "report_edge_direct")
+    assert main(["ingest", str(csv), bronze]) == 0
+    assert main(["report", bronze, out_a]) == 0
+    assert main(["direct", str(csv), out_b]) == 0
+    # ingest keeps every line, blank ones included
+    assert read_bronze(spark, bronze).count() == spark.read.text(
+        str(csv)
+    ).count()
+    a, b = read_report(out_a), read_report(out_b)
+    assert a == b
+    zz = "AIR-ZZ\t" + "".join(
+        f", ({m},{16 if m == 3 else 0})" for m in range(1, 13)
+    )
+    assert zz in a
+
+
+def _cli_report_plan(monkeypatch, argv):
+    """Physical plan of the report a CLI job writes (the text sink is
+    replaced by a plan capture)."""
+    from hbase_hadoop_flightsearch_spark import __main__ as cli
+    from hbase_hadoop_flightsearch_spark.sources import ingest
+
+    seen = []
+    monkeypatch.setattr(
+        ingest,
+        "write_report_text",
+        lambda df, out: seen.append(
+            df._jdf.queryExecution().executedPlan().toString()
+        ),
+    )
+    assert cli.main(argv) == 0
+    (plan,) = seen
+    return plan
+
+
+def test_report_scans_typed_bronze_columns(
+    spark, bts_csv, tmp_path, monkeypatch
+):
+    """Parse once: `report` reads the typed columns ingest wrote (no
+    raw_line, no re-parse), and the year filter still prunes partitions."""
+    bronze = str(tmp_path / "bronze")
+    ingest_flights(spark, bts_csv, bronze)
+    plan = _cli_report_plan(
+        monkeypatch, ["report", bronze, str(tmp_path / "out")]
+    )
+    read_schema = plan.split("ReadSchema: ")[1].split("\n")[0]
+    assert "raw_line" not in read_schema, read_schema
+    assert "from_csv" not in plan
+    assert "PartitionFilters: [isnotnull(year" in plan, plan
+    assert "(year#" in plan.split("PartitionFilters: ")[1].split("]")[0]
+
+
+def test_direct_csv_scan_reads_only_report_fields(
+    spark, bts_csv, tmp_path, monkeypatch
+):
+    """`direct` goes through the CSV source, whose column pruning leaves
+    exactly the six positional fields the report uses."""
+    plan = _cli_report_plan(
+        monkeypatch, ["direct", bts_csv, str(tmp_path / "out")]
+    )
+    assert "FileScan csv" in plan
+    assert "from_csv" not in plan
+    read_schema = plan.split("ReadSchema: ")[1].split("\n")[0]
+    assert read_schema == (
+        "struct<_c0:string,_c2:string,_c6:string,"
+        "_c37:string,_c41:string,_c43:string>"
+    ), read_schema
+
 
 def test_malformed_lines_never_crash_ingest(spark, tmp_path):
     """Robustness the reference lacks (a malformed line crashes its

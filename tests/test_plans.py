@@ -33,6 +33,44 @@ def test_q1_filter_pushed_to_scan(spark):
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual" in plan
 
 
+def test_q1_half_cent_sum_rounds_like_oracle(spark, tmp_path):
+    """A disc-price sum exactly on a half cent: 556627738.55 at a 0.50
+    discount is 278313869.275. Both sides must round the exact integer
+    sum half-up to .28 (a double ROUND of sdp / 10000 gave Spark .28 and
+    DuckDB .27)."""
+    import datetime
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hbase_hadoop_flightsearch_spark.schemas import TABLE_NAMES
+
+    from .conftest import SF_SMOKE
+    from .oracle_utils import compare_query_to_oracle
+
+    for t in TABLE_NAMES:
+        if t != "lineitem":
+            shutil.copy(f"{SF_SMOKE}/{t}.parquet", tmp_path / f"{t}.parquet")
+    schema = pq.read_schema(f"{SF_SMOKE}/lineitem.parquet").remove_metadata()
+    row = {
+        "l_orderkey": 1, "l_partkey": 1, "l_suppkey": 1,
+        "l_linenumber": 1, "l_quantity": 1.0,
+        "l_extendedprice": 556627738.55, "l_discount": 0.50,
+        "l_tax": 0.0, "l_returnflag": "A", "l_linestatus": "O",
+        "l_shipdate": datetime.datetime(1998, 9, 1),
+    }
+    pq.write_table(
+        pa.Table.from_pylist([row], schema=schema),
+        tmp_path / "lineitem.parquet",
+    )
+    q = load_all()["agg_q1_pricing_summary"]
+    (got,) = q.fn(spark, str(tmp_path)).collect()
+    assert got.sum_disc_price == 278313869.28
+    assert got.sum_base_price == 556627738.55
+    compare_query_to_oracle(spark, q, str(tmp_path))
+
+
 def test_flagship_partial_aggregation(spark):
     plan = _plan(spark, "flight_delay_report")
     # Partial (map-side) aggregation before the exchange — the combiner the

@@ -566,6 +566,58 @@ def test_stream_stream_join_equals_batch(spark, sf_smoke, tmp_path):
     assert want, "no attributed purchases in fixture"
 
 
+def test_hour_banded_attribution_across_the_epoch(spark):
+    """Pre-epoch view->purchase pairs: the hour bucket is a true floor
+    (23:30 on 1969-12-31 is hour -1, not 0), and both banded joins still
+    find exactly the brute-force pairs on every spacing around the
+    epoch."""
+    import datetime
+
+    from hbase_hadoop_flightsearch_spark.streaming.joins import (
+        _hour_bucket,
+        attribute_purchases,
+        attribute_views_outer,
+    )
+
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    minutes = {}  # event_id -> minutes from the epoch
+    rows = []
+    for m in range(-190, 191, 20):
+        for kind in ("view", "purchase"):
+            minutes[len(rows)] = m
+            rows.append(
+                (len(rows), epoch + datetime.timedelta(minutes=m), 7, kind)
+            )
+    ev = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string"
+    )
+    views = ev.filter(F.col("event_type") == "view")
+    purchases = ev.filter(F.col("event_type") == "purchase")
+
+    buckets = dict(
+        ev.select("event_id", _hour_bucket(F.col("ts"))).collect()
+    )
+    assert buckets == {i: m // 60 for i, m in minutes.items()}
+
+    want = {
+        (v[0], p[0], 7, (minutes[p[0]] - minutes[v[0]]) * 60)
+        for v in rows if v[3] == "view"
+        for p in rows if p[3] == "purchase"
+        if 0 < minutes[p[0]] - minutes[v[0]] <= 60
+    }
+    got = [tuple(r) for r in attribute_purchases(views, purchases).collect()]
+    assert sorted(got) == sorted(want) and want
+    outer = attribute_views_outer(views, purchases).collect()
+    matched = [r for r in outer if r["converted"]]
+    assert sorted(
+        (r["view_event_id"], r["purchase_event_id"]) for r in matched
+    ) == sorted((v, p) for v, p, _, _ in want)
+    unmatched = {r["view_event_id"] for r in outer if not r["converted"]}
+    assert unmatched == {
+        v[0] for v in rows if v[3] == "view"
+    } - {v for v, _, _, _ in want}
+
+
 def test_stream_static_enrich_equals_batch(spark, sf_smoke, tmp_path):
     """True stream-STATIC join: the events side is readStream (multiple
     microbatches via maxFilesPerTrigger), the customer dim is a plain
